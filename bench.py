@@ -76,7 +76,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else 0.1
 
-    from flatterer_spark.registry import all_queries
+    from flatterer_spark.registry import SKIPPED_MODULES, all_queries
     from flatterer_spark.session import get_spark
 
     spark = get_spark(app_name="flatterer-spark-bench")
@@ -154,6 +154,8 @@ def main() -> None:
         "batch_subtotal": round(total - stream_sub, 3),
         "streaming_subtotal": stream_sub,
         "timing": "min of 2 runs (3 if still >1.5s) per query after one warm-up pass",
+        # query modules whose import failed: their queries are not benched
+        "skipped_modules": dict(SKIPPED_MODULES),
     }
     # The driver keeps only the last ~2 KB of stdout; with ~100 benched
     # queries the full per-query line is ~4.5 KB, so printing it LAST got its

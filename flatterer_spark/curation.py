@@ -12,7 +12,9 @@ results to the declarative oracle:
 
  - ``dedup_cluster``: the oracle is a DuckDB recursive CTE (transitive
    closure -- fine for an oracle, exponential state at scale); the Spark path
-   is distributed min-label propagation, O(diameter) joins.
+   is connected components (``operators/graph.py``): a driver union-find
+   when the pair graph fits the broadcast bound, large-star/small-star
+   rounds above it.
  - ``pack_shards``: the oracle is a global ``SUM() OVER (ORDER BY ...)``
    (single-partition window in Spark -- a scale anti-pattern); the Spark path
    is the classic two-phase distributed prefix sum.
@@ -22,7 +24,10 @@ Scale posture (100 TB):
    (``operators/graph.py``) -- per-round cost is groupBy-min + equi-join
    shuffles on uniform keys, and the edge set contracts to stars in O(log n)
    rounds even on adversarial long-chain graphs (plain label propagation
-   needs O(diameter) rounds; tested on a 50-edge path graph).
+   needs O(diameter) rounds; tested on a 50-edge path graph).  A pair graph
+   within ``spark.sql.autoBroadcastJoinThreshold`` (24 B per edge) skips the
+   rounds and is labelled by union-find on the driver: at that size the
+   rounds are ~30 near-empty Spark jobs of fixed cost.
  - decontaminate: inverted-index equi-join on the n-gram; the benchmark side
    is tiny (the eval suites you guard against) and broadcast, so the corpus
    never shuffles.
@@ -434,7 +439,7 @@ def sql_dedup_cluster(g: Gen) -> str:
     The recursive closure enumerates every (node, reachable-node) pair --
     correct and compact as an oracle, quadratic state per component at
     scale.  The registered Spark path (:func:`dedup_cluster_query`) reaches
-    the same fixpoint with distributed min-label propagation."""
+    the same labels with connected components (:func:`_cluster_labels`)."""
     from flatterer_spark.ext_queries import sql_dedup_minhash_lsh
 
     pairs = sql_dedup_minhash_lsh(g)
@@ -461,26 +466,15 @@ def sql_dedup_cluster(g: Gen) -> str:
 _label_cache: dict[tuple, DataFrame] = {}
 
 
-def _data_fingerprint(sf_dir: str) -> tuple:
-    """Cheap fingerprint of the documents table backing the cluster labels:
-    (mtime_ns, size) over the parquet file(s).  Keying the label cache on it
-    means regenerating testdata at the same path within a session invalidates
-    the staged labels instead of serving stale clusters (ADVICE r3).  The
-    staged shingle/span/pairs views the labels are built FROM carry the
-    same fingerprint in their own cache keys (functions/fingerprint.py),
-    so a regenerated source rebuilds the whole chain, not just the tail."""
-    from flatterer_spark.functions.fingerprint import table_fingerprint
-
-    return table_fingerprint(sf_dir, "documents")
-
-
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) for every doc in a minhash-LSH duplicate pair,
-    via alternating large-star/small-star contraction
-    (:mod:`flatterer_spark.operators.graph`, Kiveris et al. SoCC 2014):
-    O(log n) rounds of ordinary groupBy-min + equi-join shuffles even on
-    adversarial long-chain graphs, where plain min-label propagation needs
-    O(diameter) rounds.
+    via :mod:`flatterer_spark.operators.graph`.  A pair graph within
+    ``spark.sql.autoBroadcastJoinThreshold`` (24 B per edge; a few dozen
+    edges at sf0.01) is collected and labelled by union-find on the driver.
+    Above it, alternating large-star/small-star contraction (Kiveris et al.
+    SoCC 2014) runs O(log n) rounds of ordinary groupBy-min + equi-join
+    shuffles even on adversarial long-chain graphs, where plain min-label
+    propagation needs O(diameter) rounds.
 
     Staged once per (session, sf_dir) -- the same compute-signatures-once
     pattern as the shingle/embedding views: dedup_cluster and dedup_resolve
@@ -493,15 +487,15 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         _shingle_view,
         sql_dedup_minhash_lsh,
     )
+    from flatterer_spark.functions.fingerprint import fresh_cache_key
     from flatterer_spark.operators.graph import connected_components
     from flatterer_spark.queries import T
 
-    key = (id(spark), sf_dir, _data_fingerprint(sf_dir))
+    # keyed on the documents fingerprint: regenerated testdata at the same
+    # path rebuilds the labels (and, through the same key rule, the staged
+    # views they are built from) instead of serving stale clusters
+    key = fresh_cache_key(_label_cache, spark, sf_dir, "documents")
     if key not in _label_cache:
-        # evict any staged labels for the same (session, dir) built from an
-        # older fingerprint -- superseded, never served again
-        for old in [k for k in _label_cache if k[:2] == key[:2]]:
-            _label_cache.pop(old).unpersist()
         T(spark, sf_dir, "documents").createOrReplaceTempView("documents")
         view = _shingle_view(spark, sf_dir)
         pairs = spark.sql(sql_dedup_minhash_lsh(_G(spark=True), sh_table=view))

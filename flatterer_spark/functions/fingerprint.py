@@ -36,11 +36,16 @@ def table_fingerprint(sf_dir: str, table: str) -> tuple:
 
 
 def fresh_cache_key(cache: dict, spark, sf_dir: str, table: str) -> tuple:
-    """Cache key (id(spark), sf_dir, fingerprint) for the staged-view
+    """Cache key (applicationId, sf_dir, fingerprint) for the staged-view
     caches; any SUPERSEDED entry for the same (session, sf_dir) is
     evicted and its persisted DataFrame unpersisted so a regenerated
-    source does not leak the stale cached artifact."""
-    key = (id(spark), sf_dir, table_fingerprint(sf_dir, table))
+    source does not leak the stale cached artifact.  The applicationId,
+    not id(spark): a stopped session's object id can be reused by a new
+    SparkSession, which would then be served a DataFrame bound to the
+    dead one (the same rule as ``queries.T``)."""
+    key = (
+        spark.sparkContext.applicationId, sf_dir, table_fingerprint(sf_dir, table)
+    )
     stale = [k for k in cache if k[:2] == key[:2] and k != key]
     for k in stale:
         old = cache.pop(k)

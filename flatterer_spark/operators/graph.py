@@ -21,6 +21,19 @@ further pass.
 Lineage is truncated each round: ``localCheckpoint`` by default, or reliable
 ``checkpoint`` into ``checkpoint_dir`` (pass an HDFS/S3 path on a production
 cluster to survive executor loss).
+
+Driver finish for small graphs.  Each round is a checkpoint job over several
+shuffle stages whatever the edge count, so a pair graph of a few dozen edges
+paid for tens of near-empty jobs.  The distinct, self-loop-free edge set is
+checkpointed first and its observed row count ``n`` is free; when
+``n * 24 B`` (the UnsafeRow width of two longs) fits Spark's own
+``spark.sql.autoBroadcastJoinThreshold`` -- the size Spark itself is willing
+to ship to every executor -- the edges are collected through Arrow and
+labelled on the driver by union-find (smaller root wins, so the label is the
+component minimum, exactly as the rounds produce), and ``rounds == 0``.
+Above the bound, or with the threshold at ``-1`` (Spark's "off"), the star
+rounds run.  One INFO line per call records the edge count, the row bytes,
+the bound, the path and the rounds.
 """
 
 from __future__ import annotations
@@ -31,6 +44,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 log = logging.getLogger("flatterer_spark")
+
+#: UnsafeRow width of one (long, long) edge: 8 B null bitset + 2 x 8 B.
+EDGE_ROW_BYTES = 24
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -59,13 +75,59 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
+def _broadcast_bound(spark) -> int:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes, as
+    the JVM parses it (``-1`` = broadcast disabled)."""
+    return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
+
+
+def _driver_labels(e: DataFrame) -> DataFrame:
+    """(id, component) of the checkpointed edge set ``e`` by union-find on
+    the driver; ids keep their Spark type."""
+    import numpy as np
+    import pyarrow as pa
+
+    t = e.toArrow()
+    n = t.num_rows
+    ids, idx = np.unique(
+        np.concatenate([t.column("u").to_numpy(), t.column("v").to_numpy()]),
+        return_inverse=True,
+    )
+    # ids is sorted, so a smaller dense index is a smaller id: the root
+    # that wins every union is the component minimum.
+    parent = list(range(len(ids)))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in zip(idx[:n].tolist(), idx[n:].tolist()):
+        ra, rb = find(a), find(b)
+        if ra < rb:
+            parent[rb] = ra
+        elif rb < ra:
+            parent[ra] = rb
+    roots = np.fromiter((find(x) for x in range(len(ids))), np.int64, len(ids))
+    id_type = t.schema.field("u").type
+    return e.sparkSession.createDataFrame(
+        pa.table({
+            "id": pa.array(ids, id_type),
+            "component": pa.array(ids[roots], id_type),
+        })
+    )
+
+
 def connected_components_with_rounds(
     edges: DataFrame, max_rounds: int = 64, checkpoint_dir: str | None = None
 ) -> tuple[DataFrame, int]:
     """(labels, rounds): labels has (id, component) for every node appearing
     in ``edges`` (columns: two numeric ids per row, any names); component is
     the minimum id reachable.  ``rounds`` is the number of large+small star
-    rounds run -- O(log n), exposed so tests can pin the convergence rate.
+    rounds run -- O(log n), exposed so tests can pin the convergence rate;
+    0 when the edge set fits the broadcast bound and is labelled on the
+    driver (see module docstring).
 
     ``checkpoint_dir``: when set, per-round lineage truncation uses RELIABLE
     ``checkpoint()`` into that directory (HDFS/S3 path on a cluster) so the
@@ -106,7 +168,28 @@ def connected_components_with_rounds(
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    nodes = _ckpt(
+    n = sig[0]
+    bound = _broadcast_bound(spark)
+    if 0 <= bound and n * EDGE_ROW_BYTES <= bound:
+        labels, rounds = _driver_labels(e), 0
+        path = "driver"
+    else:
+        labels, rounds = _star_rounds(e, sig, max_rounds, _ckpt, _ckpt_sig)
+        path = "rounds"
+    log.info(
+        "connected_components: edges=%d row_bytes=%d bound=%d path=%s rounds=%d",
+        n, n * EDGE_ROW_BYTES, bound, path, rounds,
+    )
+    return labels, rounds
+
+
+def _star_rounds(
+    e: DataFrame, sig: tuple, max_rounds: int, ckpt, ckpt_sig
+) -> tuple[DataFrame, int]:
+    """Large-star/small-star rounds from the checkpointed edge set ``e``
+    (convergence signature ``sig``) to the star fixpoint, then labels;
+    ``ckpt``/``ckpt_sig`` truncate lineage as the caller chose."""
+    nodes = ckpt(
         e.select("u").union(e.select("v"))
         .distinct()
         .select(F.col("u").alias("id"))
@@ -115,7 +198,7 @@ def connected_components_with_rounds(
     rounds = 0
     while rounds < max_rounds:
         prev = e
-        e, cur = _ckpt_sig(_small_star(_large_star(e)))
+        e, cur = ckpt_sig(_small_star(_large_star(e)))
         rounds += 1
         # cheap signature first; on a signature match confirm true set
         # equality (both sides are distinct, so equal counts + empty

@@ -176,15 +176,31 @@ _MODULES = [
 ]
 
 
+#: Query modules the last :func:`_collect` could not import, by name, with
+#: the error ("ExcType: message").  A module that fails at import time (for
+#: example ``flatten_queries`` reading an absent golden fixture) costs only
+#: its own queries, never the whole registry; ``bench.py`` lists these.
+SKIPPED_MODULES: dict[str, str] = {}
+
+
 def _collect(suffix: str) -> dict:
-    """Merge the per-module ``{PREFIX}_{suffix}`` dicts in declaration order."""
+    """Merge the per-module ``{PREFIX}_{suffix}`` dicts in declaration order,
+    skipping (with a WARNING, recorded in :data:`SKIPPED_MODULES`) any
+    module whose import raises."""
     import importlib
+    import logging
 
     out: dict = {}
+    SKIPPED_MODULES.clear()
     for mod_name, prefix in _MODULES:
         try:
             mod = importlib.import_module(mod_name)
-        except ImportError:
+        except Exception as exc:  # noqa: BLE001 -- isolate, report, go on
+            SKIPPED_MODULES[mod_name] = f"{type(exc).__name__}: {exc}"
+            logging.getLogger("flatterer_spark").warning(
+                "registry: skipping %s, its import failed: %s",
+                mod_name, SKIPPED_MODULES[mod_name],
+            )
             continue
         out.update(getattr(mod, f"{prefix}_{suffix}"))
     return out

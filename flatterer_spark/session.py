@@ -5,6 +5,21 @@ ones we would ship as cluster defaults: AQE on (runtime re-planning, skew-join
 splitting, partition coalescing), 32 shuffle partitions at test scale (raise to
 ~2-3x total cores on a real cluster), Arrow enabled so any Pandas-UDF path is
 vectorized, UTC session timezone so timestamp semantics are portable.
+
+Python workers start through :mod:`flatterer_spark.worker_daemon`
+(``spark.python.daemon.module``) instead of ``pyspark.daemon``.  It is
+``pyspark.daemon`` plus one patch: on interpreters whose zipimporter re-reads
+an archive's whole directory on every ``invalidate_caches()`` (Python 3.11
+and older), the re-read is made lazy.  pyspark invalidates the import caches
+at the start of every task, so without the patch each task in a reused
+worker re-read ``pyspark.zip`` and the ``spark-core`` jar 14 times: about
+0.2 s of CPU before the user function ran, 0.03 s with the patch (Spark 4.1,
+Python 3.11, 4-core VM).
+The package's parent directory is appended to
+``spark.executorEnv.PYTHONPATH`` (Spark puts it after its own zips) so the
+workers import the daemon whatever the JVM's working directory is; the
+master is always ``local[...]``, so that directory is on the workers'
+filesystem.
 """
 
 from __future__ import annotations
@@ -57,6 +72,12 @@ def get_spark(
         # "org.apache.hadoop.fs.LocalFileSystem"}``.
         .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (conf.get("spark.executorEnv.PYTHONPATH"), pkg_parent) if p
+    )
+    conf.setdefault("spark.python.daemon.module", "flatterer_spark.worker_daemon")
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -145,6 +145,28 @@ def test_dedup_cluster_is_cc_fixpoint(spark, sf_dir):
     assert set(got) == set(parent)
 
 
+def test_staged_caches_key_on_application_id(spark, sf_dir):
+    """The cluster-label and staged-view caches key on the session's
+    applicationId, never on id(spark): a stopped session's object id can be
+    reused by a new session, which must not be served a DataFrame bound to
+    the dead one."""
+    from types import SimpleNamespace
+
+    import flatterer_spark.curation as C
+    from flatterer_spark.functions.fingerprint import fresh_cache_key
+
+    C._cluster_labels(spark, sf_dir)
+    app = spark.sparkContext.applicationId
+    assert {k[0] for k in C._label_cache if k[1] == sf_dir} == {app}
+
+    # one Python object, two applications: two keys
+    cache: dict = {}
+    stand_in = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="a1"))
+    first = fresh_cache_key(cache, stand_in, sf_dir, "documents")
+    stand_in.sparkContext.applicationId = "a2"
+    assert fresh_cache_key(cache, stand_in, sf_dir, "documents") != first
+
+
 def test_decontaminate_flags_planted_overlap(spark, sf_dir, con):
     """A doc sharing a benchmark doc's exact text must be flagged; benchmark
     docs themselves never appear in the output."""

@@ -287,3 +287,45 @@ def test_active_deferral_expires_with_new_round(tmp_path):
     assert name in actively_deferred(str(tmp_path))
     (tmp_path / "CORRECTNESS_r04.json").write_text(json.dumps({}))
     assert name not in actively_deferred(str(tmp_path))
+
+
+def test_registry_skips_a_failing_module_loudly(monkeypatch):
+    """A query module that raises at import time (``flatten_queries``
+    reading an absent golden fixture) costs only its own queries: the rest
+    of the registry still lists, the skip is logged at WARNING with the
+    module and its error, and ``SKIPPED_MODULES`` names it for bench.py."""
+    import importlib
+    import logging
+
+    from flatterer_spark import registry
+
+    real_import = importlib.import_module
+    failing = "flatterer_spark.flatten_queries"
+
+    def import_module(name, *a, **kw):
+        if name == failing:
+            raise FileNotFoundError("basic_expected/fields.csv")
+        return real_import(name, *a, **kw)
+
+    monkeypatch.setattr(importlib, "import_module", import_module)
+    # a handler on the package logger itself: logutil.setup_logging turns
+    # propagation off, which would hide the record from caplog
+    records: list[logging.LogRecord] = []
+    handler = logging.Handler(logging.WARNING)
+    handler.emit = records.append
+    log = logging.getLogger("flatterer_spark")
+    log.addHandler(handler)
+    try:
+        queries = registry.all_queries()
+        oracles = registry.all_oracles()
+    finally:
+        log.removeHandler(handler)
+
+    assert "q01_filter_project" in queries and "dedup_cluster" in queries
+    assert "q01_filter_project" in oracles
+    assert not any(k.startswith(("q19_flatten", "q20_flatten")) for k in queries)
+    assert registry.SKIPPED_MODULES == {
+        failing: "FileNotFoundError: basic_expected/fields.csv"
+    }
+    warned = [r.getMessage() for r in records if r.levelno == logging.WARNING]
+    assert any(failing in m and "FileNotFoundError" in m for m in warned), warned

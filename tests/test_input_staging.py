@@ -12,6 +12,7 @@ import sys
 import threading
 
 FIX = "/root/reference/fixtures"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_stdin_input_stages(tmp_path):
@@ -20,18 +21,18 @@ def test_stdin_input_stages(tmp_path):
     and prints the resulting table names + main row count."""
     script = tmp_path / "child.py"
     script.write_text(
-        """
+        f"""
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {REPO!r})
 from flatterer_spark.session import get_spark
 from flatterer_spark.flatten_api import flatten_dataframes
 
 spark = get_spark("stdin-test", cpus=2)
 res = flatten_dataframes(spark, "-")
-print(json.dumps({
+print(json.dumps({{
     "tables": sorted(res.tables),
     "main_rows": res.tables["main"].count(),
-}))
+}}))
 """
     )
     with open(f"{FIX}/basic.json", "rb") as f:
@@ -113,7 +114,7 @@ def test_cli_end_to_end(tmp_path):
         ],
         capture_output=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=REPO,
         env={**os.environ, "SPARK_GRAFT_CPUS": "2"},
     )
     assert r.returncode == 0, r.stderr.decode()[-2000:]
